@@ -148,14 +148,11 @@ def minhash_candidates(
     # materialize the signature table once: AQE never reuses the
     # exchange under a self-join (each side becomes its own query
     # stage), so without a checkpoint the whole shingle->minhash
-    # pipeline — the expensive part — executes twice. r14: checkpoint
-    # the NARROW signature table (1 row/doc) rather than the exploded
-    # band rows (bands rows/doc) — the band explode above the
+    # pipeline — the expensive part — executes twice. The checkpoint
+    # sits on the NARROW signature table (1 row/doc) rather than the
+    # exploded band rows (bands rows/doc): the band explode above the
     # checkpoint is pure array slicing that re-runs per join side for
-    # free, while the checkpointed blocks shrink by the band factor
-    # and, measured at sf0.1, the lazy checkpoint's physical-planning
-    # cost during DataFrame construction halves (same trick on the
-    # simhash twin: build 0.90 -> 0.42 s, total 2.51 -> 1.92 s).
+    # free, while the checkpointed blocks shrink by the band factor.
     # Checkpointing before a banded self-join is the standard LSH
     # shape at any scale (MEMORY_AND_DISK blocks, spillable).
     sig = minhash_signatures(
@@ -450,12 +447,9 @@ def simhash_dedup_candidates(
     # materialized once before the self-join: see minhash_candidates —
     # AQE's per-stage planning never reuses the exchange, so the
     # token-explode + n_bits-vote aggregate would otherwise run twice.
-    # r14: the checkpoint moved from the exploded band rows down to the
-    # NARROW fingerprint table (1 row/doc vs n_bands rows/doc) — the
-    # band explode above it is shift/mask column algebra that re-runs
-    # per join side for free, and the lazy checkpoint's construction-
-    # time physical planning halves (measured 0.90 -> 0.42 s build,
-    # 2.51 -> 1.92 s total at sf0.1, identical rows).
+    # The checkpoint sits on the NARROW fingerprint table (1 row/doc vs
+    # n_bands rows/doc): the band explode above it is shift/mask column
+    # algebra that re-runs per join side for free.
     sh = (
         simhash_table(df, id_col, text_col, n_bits)
         .withColumnRenamed("simhash", "_sh")

@@ -176,10 +176,10 @@ def _doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Union order is irrelevant: the per-doc fold sorts the collected
     p values before summing, so the two-path union is bit-identical
-    to the single-join form (hash-proven vs ORACLE_LM_DOC_SCORES).
-    Measured at sf0.1: exec 1.43 -> 0.96 s (-33%); the model is
-    lazily checkpointed once (head, anti filter and tail join all
-    read it; AQE never reuses the exchange across them).
+    to the single-join form (hash-checked against ORACLE_LM_DOC_SCORES
+    in PARITY_SWEEP_r15_sf0.01.txt). The model is lazily checkpointed
+    once (head, anti filter and tail join all read it; AQE never
+    reuses the exchange across them).
     """
     bi = _doc_bigrams(spark, sf_dir)
     # model grouped directly by bigram (w1 is a function of bigram) so

@@ -103,39 +103,23 @@ def merge_history(
         for b, c, v, cats in zip(*state):
             hist[int(b)] = [int(c), int(v), set(json.loads(cats))]
     if len(batch) > 0:
-        # ns->s via a zero-copy int64 view of the datetime64 block
-        # (r13, guide §4.4 "heavyweight work once": Series.astype pays
-        # ~170 us of pandas block-manager overhead PER CALL even on a
-        # 5-row drip batch — this runs once per (key, trigger), so at
-        # 150 keys x 28 triggers the fixed cost dwarfs the data).
-        # dtype pinned to datetime64[ns] (ADVICE r13 #4): a tz-aware
-        # Series would otherwise surface as an object array (view
-        # raises) and a pandas-2 [us] block would silently be 1000x off.
+        # ns->s via a zero-copy int64 view of the datetime64 block:
+        # this runs once per (key, trigger), and Series.astype would
+        # pay a fixed pandas block-manager cost per call even on a
+        # few-row batch. The dtype is pinned to datetime64[ns]: a
+        # tz-aware Series would otherwise surface as an object array
+        # (view raises) and a [us] block would silently be 1000x off.
         epoch = batch["time"].to_numpy(dtype="datetime64[ns]").view("int64") // 10**9
         buckets = (epoch // slide_sec) * slide_sec
-        if "categories_json" in batch.columns:
-            # pre-reduced partial rows (see prereduce_log_records): each
-            # carries a category SET for its bucket, not a single value
-            for b, c, v, cats in zip(
-                buckets,
-                batch["clicks"].to_numpy(),
-                batch["views"].to_numpy(),
-                batch["categories_json"].to_numpy(),
-            ):
-                slot = hist.setdefault(int(b), [0, 0, set()])
-                slot[0] += int(c)
-                slot[1] += int(v)
-                slot[2].update(json.loads(cats))
-        else:
-            for b, c, v, cat in zip(
-                buckets, batch["clicks"].to_numpy(), batch["views"].to_numpy(),
-                batch["category"].to_numpy(),
-            ):
-                slot = hist.setdefault(int(b), [0, 0, set()])
-                slot[0] += int(c)
-                slot[1] += int(v)
-                if cat is not None:
-                    slot[2].add(str(cat))
+        for b, c, v, cat in zip(
+            buckets, batch["clicks"].to_numpy(), batch["views"].to_numpy(),
+            batch["category"].to_numpy(),
+        ):
+            slot = hist.setdefault(int(b), [0, 0, set()])
+            slot[0] += int(c)
+            slot[1] += int(v)
+            if cat is not None:
+                slot[2].add(str(cat))
     if hist:
         horizon = max(hist) - (window_sec - slide_sec)
         hist = {b: s for b, s in hist.items() if b >= horizon}
@@ -160,12 +144,11 @@ def summarize(state: tuple[list, list, list, list]) -> tuple[int, int, int]:
     return total_clicks, total_views, len(cats)
 
 
-# One-row output template for _update_fn (r13, guide §4 — cut fixed
-# per-call pandas overhead at the Python boundary): building the dict-
-# of-lists frame costs ~250 us per (key, trigger); copying this
-# pre-typed template and poking scalars in with .iat costs ~95 us.
-# dtypes match OUTPUT_SCHEMA's Arrow mapping exactly (object/int64/
-# int64/int64/bool/object), pinned by test_state_output_dtypes.
+# One-row output template for _update_fn: copying this pre-typed
+# frame and poking scalars in with .iat is cheaper per (key, trigger)
+# than building a dict-of-lists frame on every call. dtypes match
+# OUTPUT_SCHEMA's Arrow mapping exactly (object/int64/int64/int64/
+# bool/object), pinned by test_state_output_dtypes.
 _OUT_TEMPLATE = pd.DataFrame(
     {
         "ip": pd.array([""], dtype=object),
@@ -197,14 +180,14 @@ def _update_fn(
         return
     state.update(tuple(merged))
     if event_time:
-        # event-time eviction (r11, mirroring state_v2's mode): evict
-        # when the WATERMARK passes last-seen + timeout. The timer base
-        # is the newest retained bucket — a floor of the true last-seen
-        # instant at SLIDE_SEC grain (the state schema carries no finer
-        # timestamp; the <=30s slack only delays eviction, never evicts
-        # a live key early). Data-derived, so replays evict at the same
-        # points regardless of wall-clock speed — the backfill-safe
-        # form; see keyed_history_verdicts for when each mode is right.
+        # event-time eviction: evict when the WATERMARK passes
+        # last-seen + timeout. The timer base is the newest retained
+        # bucket — a floor of the true last-seen instant at SLIDE_SEC
+        # grain (the state schema carries no finer timestamp; the <=30s
+        # slack only delays eviction, never evicts a live key early).
+        # Data-derived, so replays evict at the same points regardless
+        # of wall-clock speed — the backfill-safe form; see
+        # keyed_history_verdicts for when each mode is right.
         #
         # Clamped to just past the current watermark: unlike windowed
         # aggregation, applyInPandasWithState does NOT drop late input,
@@ -242,88 +225,8 @@ def _update_fn_event_time(
     return _update_fn(key, pdf_iter, state, event_time=True)
 
 
-PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("ip", T.StringType()),
-        T.StructField("time", T.TimestampType()),
-        T.StructField("clicks", T.LongType()),
-        T.StructField("views", T.LongType()),
-        T.StructField("categories_json", T.StringType()),
-    ]
-)
-
-
-def prereduce_log_records(
-    log_records: DataFrame, slide_sec: int = SLIDE_SEC
-) -> DataFrame:
-    """Partition-local pre-aggregation ahead of the stateful operator.
-
-    A streaming groupBy before ``applyInPandasWithState`` is illegal
-    (two stateful operators), but a STATELESS ``mapInPandas`` that
-    combines rows per (ip, bucket) within each scan partition is not —
-    it is the map-side combiner the state path otherwise lacks. The
-    state operator's shuffle and Arrow transfer then move one partial
-    per (key, bucket, partition) instead of one row per event.
-    ``merge_history`` merges partials associatively, so results are
-    identical to the raw path (pinned by test).
-
-    WHEN TO USE: strictly CLUSTER-conditional. The r10 controlled
-    sweep (tools/stateful_ab.py, STATEFUL_AB_r10.md) settled this:
-    there is NO local-mode crossover at ANY multiplicity — the
-    combiner still costs 11-15% wall at a measured x750 shuffle-row
-    shrink (120k events over 10 keys), because a single-JVM shuffle
-    is an in-memory copy and the state operator's per-batch cost is
-    dominated by fixed state-store commit overhead, not input rows.
-    Enable it only where the shuffle crosses a real network and
-    per-row serialization + state-store I/O scale with row count; the
-    shrink factor (bench.py's ``prereduce_shrink_factor``, up to x750
-    measured) is the number that transfers to that deployment, the
-    local wall numbers are the cost floor. ``keyed_history_verdicts``
-    defaults to the raw path everywhere.
-    """
-
-    def combine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            # same zero-copy ns->s view as merge_history (r13, §4.4)
-            epoch = pdf["time"].to_numpy(dtype="datetime64[ns]").view("int64") // 10**9
-            bucket = (epoch // slide_sec) * slide_sec
-            grouped = pd.DataFrame(
-                {
-                    "ip": pdf["ip"],
-                    "bucket": bucket,
-                    "clicks": pdf["clicks"],
-                    "views": pdf["views"],
-                    "category": pdf["category"],
-                }
-            ).groupby(["ip", "bucket"], sort=False)
-            g = grouped.agg(
-                clicks=("clicks", "sum"),
-                views=("views", "sum"),
-                categories_json=("category", "unique"),
-            ).reset_index()
-            # vectorized set->json on the already-unique arrays beats a
-            # python lambda per group by ~3x
-            g["categories_json"] = g["categories_json"].map(
-                lambda u: json.dumps(sorted(str(c) for c in u if c is not None))
-            )
-            yield pd.DataFrame(
-                {
-                    "ip": g["ip"],
-                    "time": pd.to_datetime(g["bucket"], unit="s"),
-                    "clicks": g["clicks"].astype("int64"),
-                    "views": g["views"].astype("int64"),
-                    "categories_json": g["categories_json"],
-                }
-            )
-
-    return log_records.mapInPandas(combine, PARTIAL_SCHEMA)
-
-
 def keyed_history_verdicts(
     log_records: DataFrame,
-    prereduce: bool = False,
     event_time: bool = False,
     watermark_delay: str = "10 seconds",
 ) -> DataFrame:
@@ -332,34 +235,26 @@ def keyed_history_verdicts(
 
     Input: LogRecord-shaped streaming DataFrame
     (ip, time, clicks, views, category). Output: one verdict row per
-    active key per micro-batch (update semantics). ``prereduce=True``
-    inserts the stateless map-side combiner (see
-    :func:`prereduce_log_records` for when that pays); results are
-    identical either way.
+    active key per micro-batch (update semantics).
 
-    ``event_time=True`` (r11) switches idle-key eviction from the wall
+    ``event_time=True`` switches idle-key eviction from the wall
     clock to the watermark — evict when it passes the key's newest
     bucket + 10 min. Processing-time (the default, faithful to
     ImplDStreams.scala:121) is right for live ingestion where arrival
     ≈ event time; event-time is the replay-safe form for backfills
     (wall clock racing event time would otherwise purge every key
     mid-replay, and any >10-minute stall purges state that is live in
-    event time). Same mode contract as the v2 twin
-    (state_v2.keyed_history_verdicts_v2), with one semantic asymmetry:
-    applyInPandasWithState does NOT drop late input — rows behind the
-    watermark still reach ``_update_fn_event_time`` and merge into the
-    history; the watermark only drives EVICTION timing (which is why
-    the timer clamps to watermark+1 for already-expired keys — Spark
-    rejects timers at or behind the watermark). Only the v2
-    transformWithState path drops rows <= the watermark before the
-    operator. Size ``watermark_delay`` to the deployment's real
-    out-of-orderness either way: here it bounds how long an idle key's
-    state survives; in v2 it additionally bounds which rows count.
+    event time). applyInPandasWithState does NOT drop late input:
+    rows behind the watermark still reach ``_update_fn_event_time``
+    and merge into the history. The watermark only drives EVICTION
+    timing, which is why the timer clamps to watermark+1 for
+    already-expired keys (Spark rejects timers at or behind the
+    watermark). Size ``watermark_delay`` to the deployment's real
+    out-of-orderness: it bounds how long an idle key's state survives.
     """
-    source = prereduce_log_records(log_records) if prereduce else log_records
     if event_time:
         return (
-            source.withWatermark("time", watermark_delay)
+            log_records.withWatermark("time", watermark_delay)
             .groupBy("ip")
             .applyInPandasWithState(
                 _update_fn_event_time,
@@ -369,7 +264,7 @@ def keyed_history_verdicts(
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             )
         )
-    return source.groupBy("ip").applyInPandasWithState(
+    return log_records.groupBy("ip").applyInPandasWithState(
         _update_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

@@ -29,7 +29,9 @@ def test_committed_sweep_evidence_is_current():
     claims to: the latest sweep file's "(N registered)" count has to
     equal len(QUERIES), so registering a query without re-running the
     full sweep (tools/parity_sweep.py) fails CI instead of silently
-    shipping stale evidence (round-3 verdict item 3)."""
+    shipping stale evidence. The per-line query NAMES must also equal
+    the registry (a count can match while the names drift), with every
+    oracle-backed query hash-checked ("ok") and the rest rows-only."""
     import pathlib
     import re
 
@@ -58,6 +60,20 @@ def test_committed_sweep_evidence_is_current():
     assert int(m.group(2)) == len(ORACLES), (
         f"{latest.name} claims {m.group(2)} oracle-backed but ORACLES has "
         f"{len(ORACLES)}"
+    )
+    status = dict(
+        re.findall(r"^(\w+)\s+\d+\.\ds  (ok \(rows-only\)|ok|FAIL)", text, re.M)
+    )
+    assert set(status) == set(QUERIES), (
+        f"{latest.name} query names differ from the registry: missing "
+        f"{sorted(set(QUERIES) - set(status))}, stale "
+        f"{sorted(set(status) - set(QUERIES))} — re-run tools/parity_sweep.py"
+    )
+    hashed = {name for name, s in status.items() if s == "ok"}
+    assert hashed == set(ORACLES), (
+        f"{latest.name}: oracle-backed queries without a passing hash "
+        f"check: {sorted(set(ORACLES) - hashed)}; hash-checked without an "
+        f"oracle: {sorted(hashed - set(ORACLES))}"
     )
 
 

@@ -95,7 +95,7 @@ class FakeEventTimeGroupState(FakeGroupState):
         return self.watermark_ms
 
 
-# --- event-time eviction mode (r11, mirroring state_v2's) --------------------
+# --- event-time eviction mode -----------------------------------------------
 
 
 def test_event_time_mode_arms_watermark_timer_from_newest_bucket():

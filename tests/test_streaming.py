@@ -162,36 +162,69 @@ def test_stateful_history_accumulates_across_batches(spark, tmp_path):
     assert verdicts == [(False, "clear"), (True, "categories")]
 
 
-def test_stateful_prereduce_matches_raw_path(spark, tmp_path):
-    """The map-side combiner (prereduce_log_records) must be invisible
-    in results: identical verdict rows for the same multi-batch drip
-    with and without it."""
+@pytest.mark.parametrize("event_time", [False, True], ids=["proc_time", "event_time"])
+def test_stateful_history_survives_checkpoint_restart(spark, tmp_path, event_time):
+    """Exactly-once across a query RESTART on the default state store:
+    stop the keyed-history query mid-drip, drop the last file, restart
+    on the same checkpoint. The restarted run must process only the new
+    file and merge it onto the persisted per-key state, so the verdict
+    rows of both runs together equal one uninterrupted drip's. Holds in
+    both eviction modes (event time also restores the watermark)."""
+    import os
+
     from in_stream_processing_course_spark.streaming.state import (
         keyed_history_verdicts,
     )
 
-    b1 = gen.category_hopper("ip1", 40, 4, base_time=0, interval=20) + (
-        gen.requests_burst("hot", 120, interval=4)
-    )
-    b2 = [
-        gen.Action(a.time + 60, f"cat{int(a.category_id[3:]) + 4}", a.ip, a.action)
-        for a in gen.category_hopper("ip1", 40, 4, base_time=0, interval=20)
-    ]
-    in_dir = write_actions(tmp_path, "b1.json", b1)
-    write_actions(tmp_path, "b2.json", b2)
+    def shifted(base, offset):
+        return [
+            gen.Action(a.time, f"cat{int(a.category_id[3:]) + offset}", a.ip, a.action)
+            for a in gen.category_hopper("ip1", 20, 4, base_time=base, interval=20)
+        ]
 
-    def run(prereduce, ckpt):
+    # ip1 gains 4 new categories per file; "hot" crosses the request
+    # limit only once file 3 merges onto file 1's persisted history
+    files = [
+        shifted(0, 0) + gen.requests_burst("hot", 600, base_time=0, interval=60),
+        shifted(120, 4) + gen.category_hopper("hum", 10, 2, base_time=120, interval=20),
+        shifted(240, 8) + gen.requests_burst("hot", 600, base_time=240, interval=60),
+    ]
+
+    def write(in_dir, i):
+        path = in_dir / f"b{i}.json"
+        gen.write_json_lines(files[i], str(path))
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # pin drip order
+        return str(in_dir)
+
+    def drain(in_dir, ckpt):
+        rows: list[tuple] = []
         lr = actions_to_log_records(
             read_action_stream(spark, in_dir, max_files_per_trigger=1)
         )
-        out = run_stream_to_memory(
-            keyed_history_verdicts(lr, prereduce=prereduce),
-            output_mode="update",
+        run_stream_foreach_batch(
+            keyed_history_verdicts(lr, event_time=event_time),
+            lambda df, _bid: rows.extend(tuple(r) for r in df.collect()),
+            "update",
             checkpoint_dir=str(tmp_path / ckpt),
         )
-        return sorted(tuple(r) for r in out.collect())
+        return sorted(rows)
 
-    assert run(True, "ckpt_pre") == run(False, "ckpt_raw")
+    for i in range(3):
+        write(tmp_path / "full", i)
+    uninterrupted = drain(str(tmp_path / "full"), "ckpt_full")
+
+    write(tmp_path / "restart", 0)
+    in_dir = write(tmp_path / "restart", 1)
+    first = drain(in_dir, "ckpt_restart")
+    write(tmp_path / "restart", 2)
+    second = drain(in_dir, "ckpt_restart")
+
+    assert sorted(first + second) == uninterrupted
+    # the restarted run saw only file 3, merged onto run-1 state
+    assert {(r[0], r[3], r[4], r[5]) for r in second} == {
+        ("ip1", 12, True, "categories"),
+        ("hot", 1, True, "requests"),
+    }
 
 
 def test_dedup_within_watermark_stream(spark, tmp_path):

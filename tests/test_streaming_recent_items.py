@@ -1,8 +1,8 @@
 """Rolling recent-items MapState operator (streaming/recent_items.py):
 stream/batch equivalence with pruned state, cross-batch displacement,
 and the prune-safety property (a pruned category re-enters only via a
-new occurrence). Gated like test_state_v2 on a working protobuf +
-RocksDB provider.
+new occurrence). Gated on a working protobuf (transformWithState's
+wire protocol) and run on the RocksDB provider.
 """
 
 from __future__ import annotations
@@ -120,7 +120,7 @@ def test_recent_items_pruned_category_reenters_on_new_occurrence(
 def test_recent_items_stream_matches_batch_non_utc_session_tz(
     rocksdb_spark, tmp_path
 ):
-    """ADVICE r4 (low): epoch seconds are computed in the query plan
+    """Epoch seconds are computed in the query plan
     (unix_timestamp), not re-derived from pandas datetimes inside the
     processor — so the streamed cat@epoch strings must equal the batch
     twin even when the session timezone is not UTC (Arrow hands the

@@ -1,8 +1,8 @@
 """Rolling last-N median ListState operator
 (streaming/rolling_median.py): stream/batch equivalence across
 micro-batch boundaries with displacement, and robustness of the
-median to a pruned outlier. Gated like the other v2-state tests on a
-working protobuf + RocksDB provider.
+median to a pruned outlier. Gated like the other transformWithState
+tests on a working protobuf + RocksDB provider.
 """
 
 from __future__ import annotations
